@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -9,10 +10,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.io.BufferedReader
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /**
  * CDC backlog replay source — a Data Source V2 `MicroBatchStream`.
@@ -27,8 +30,10 @@ import scala.jdk.CollectionConverters._
  *
  * Output schema: `(segment string, pos long, value string)` — `value` is the
  * raw event JSON; downstream parses with `from_json` + the ChangeEvent
- * schema. One input partition per segment slice → reads scale out with
- * segment count on a real cluster.
+ * schema. Input partitions are runs of consecutive segment slices, balanced
+ * by line count, at most one per core (`spark.sql.leafNodeDefaultParallelism`,
+ * which defaults to `defaultParallelism`): reads scale out with the cluster,
+ * and a window of many small segments does not pay a task per segment.
  *
  * Usage:
  * {{{
@@ -56,12 +61,12 @@ object BacklogSource {
   def segments(dir: String): Seq[Path] = {
     val p = Paths.get(dir)
     if (!Files.exists(p)) Seq.empty
-    else Files.list(p).iterator().asScala.filter { f =>
+    else Using.resource(Files.list(p))(_.iterator().asScala.filter { f =>
       val n = f.getFileName.toString
       // .jsonl: one JSON event per line; .segb64: one base64 wire segment
       // per line (MysqlBinlog/PgOutput bytes through the same offsets)
       n.endsWith(".jsonl") || n.endsWith(".segb64")
-    }.toSeq.sortBy(_.getFileName.toString)
+    }.toSeq.sortBy(_.getFileName.toString))
   }
 
   /**
@@ -135,7 +140,7 @@ private class BacklogMicroBatchStream(path: String, maxLinesPerTrigger: Long)
   import BacklogSource._
 
   private def lineCount(p: Path): Long =
-    Files.lines(p).count()
+    Using.resource(Files.lines(p))(_.count())
 
   override def initialOffset(): Offset = BacklogOffset(0, 0)
 
@@ -198,38 +203,91 @@ private class BacklogMicroBatchStream(path: String, maxLinesPerTrigger: Long)
           s"(segment at index ${s.segment} is now " +
           s"'${segName(segs, s.segment)}') — purged/rotated while offline; " +
           "halting instead of silently skipping. Re-snapshot or reset the checkpoint.")
-    val parts = Seq.newBuilder[InputPartition]
+    val slices = Seq.newBuilder[BacklogSlice]
     var seg = s.segment
     var from = s.line
     while (seg <= e.segment && seg < segs.length) {
       val upper = if (seg == e.segment) e.line else lineCount(segs(seg))
-      if (upper > from) parts += BacklogPartition(segs(seg).toString, seg, from, upper)
+      if (upper > from) slices += BacklogSlice(segs(seg).toString, from, upper)
       seg += 1
       from = 0
     }
-    parts.result().toArray
+    val spark = SparkSession.active
+    val cores = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    BacklogSlice.pack(slices.result(), math.max(cores, 1)).map(BacklogPartition(_)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p = partition.asInstanceOf[BacklogPartition]
-      new PartitionReader[InternalRow] {
-        private val iter = Files.lines(Paths.get(p.file), StandardCharsets.UTF_8)
-          .skip(p.from).limit(p.until - p.from).iterator()
-        private var pos = p.from - 1
-        private var current: String = _
-        override def next(): Boolean =
-          if (iter.hasNext) { current = iter.next(); pos += 1; true } else false
-        override def get(): InternalRow = InternalRow(
-          UTF8String.fromString(Paths.get(p.file).getFileName.toString),
-          pos, UTF8String.fromString(current))
-        override def close(): Unit = ()
-      }
-    }
+    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+      new BacklogReader(partition.asInstanceOf[BacklogPartition].slices)
   }
 
   override def stop(): Unit = ()
 }
 
-private case class BacklogPartition(file: String, segment: Int, from: Long, until: Long)
-  extends InputPartition
+/** Lines `[from, until)` of one segment file. */
+private case class BacklogSlice(file: String, from: Long, until: Long) {
+  def lines: Long = until - from
+}
+
+private object BacklogSlice {
+  /**
+   * Groups consecutive slices into at most `parts` runs balanced by line
+   * count: a slice joins the run its midpoint falls in. Order is kept, so
+   * reading the runs in order reads the slices in order.
+   */
+  def pack(slices: Seq[BacklogSlice], parts: Int): Seq[Seq[BacklogSlice]] = {
+    val total = slices.map(_.lines).sum
+    var before = 0L
+    val runs = slices.map { sl =>
+      // doubled so the midpoint stays integral
+      val run = math.min(parts - 1L, (2 * before + sl.lines) * parts / (2 * total))
+      before += sl.lines
+      run -> sl
+    }
+    runs.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
+  }
+}
+
+private case class BacklogPartition(slices: Seq[BacklogSlice]) extends InputPartition
+
+/** Reads its slices in order, with at most one segment file open at a time. */
+private class BacklogReader(slices: Seq[BacklogSlice]) extends PartitionReader[InternalRow] {
+  private val pending = slices.iterator
+  private var reader: BufferedReader = _
+  private var segment: UTF8String = _
+  private var pos = 0L
+  private var until = 0L
+  private var current: String = _
+
+  /** Closes the open segment file and opens the next slice, if any. */
+  private def advance(): Boolean = {
+    close()
+    if (!pending.hasNext) false
+    else {
+      val slice = pending.next()
+      val path = Paths.get(slice.file)
+      reader = Files.newBufferedReader(path, StandardCharsets.UTF_8)
+      segment = UTF8String.fromString(path.getFileName.toString)
+      pos = slice.from - 1
+      until = slice.until
+      var skip = slice.from
+      while (skip > 0 && reader.readLine() != null) skip -= 1
+      true
+    }
+  }
+
+  override def next(): Boolean = {
+    while ((reader == null || pos + 1 >= until) && advance()) ()
+    if (reader == null) false
+    else {
+      current = reader.readLine()
+      if (current == null) { close(); false } else { pos += 1; true }
+    }
+  }
+
+  override def get(): InternalRow = InternalRow(segment, pos, UTF8String.fromString(current))
+
+  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
+}

@@ -23,7 +23,12 @@ import scala.util.{Failure, Success, Try}
  *
  * Scale notes: the persisted batch is shared across sink jobs (the
  * reference's frozen `Arc<[Event]>`, zero-copy analog); each sink write is a
- * distributed job; the only driver-side state is the tiny ledger.
+ * distributed job; the only driver-side state is the tiny ledger. No job
+ * runs before the fan-out: the first sink job to read the batch builds the
+ * cache (under AQE a `TableCacheQueryStage`), and concurrent sinks share it
+ * block by block through the block manager, so the processor chain still
+ * runs once per row. That build counts against `sinkTimeout` and is
+ * included in `graft_sink_latency_seconds`.
  */
 object CdcPipeline {
 
@@ -58,9 +63,11 @@ object CdcPipeline {
   def processBatch(cfg: Config, ledger: SinkLedger)(batch0: DataFrame, batchId: Long): Unit = {
     val batch = cfg.processors.foldLeft(batch0)((df, p) => p(df))
     batch.persist(StorageLevel.MEMORY_AND_DISK)
+    // only the metrics read the row count; once a sink has built the cache
+    // it is a scan of the cached batch
+    lazy val rows = batch.count()
+    val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
     try {
-      val rows = batch.count() // materialize once; sink jobs reuse the cached batch
-      val pool = Executors.newFixedThreadPool(math.max(cfg.sinks.size, 1))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val futures = cfg.sinks.map { sink =>
         sink.id -> Future {
@@ -68,15 +75,16 @@ object CdcPipeline {
           else {
             val filtered = sink.filter.map(batch.filter).getOrElse(batch)
             val t0 = System.nanoTime()
-            val ok = try { sink.write(filtered, batchId); true }
-            catch { case e: Throwable =>
-              cfg.metrics.foreach(Metrics.recordSinkBatch(_, cfg.pipelineName,
-                sink.id, rows, (System.nanoTime() - t0) / 1e9, ok = false))
-              throw e
+            def record(ok: Boolean): Unit = cfg.metrics.foreach { r =>
+              val seconds = (System.nanoTime() - t0) / 1e9
+              // a batch that fails to build fails its count too
+              val events = if (ok) rows else Try(rows).getOrElse(0L)
+              Metrics.recordSinkBatch(r, cfg.pipelineName, sink.id, events, seconds, ok)
             }
-            cfg.metrics.foreach(Metrics.recordSinkBatch(_, cfg.pipelineName,
-              sink.id, rows, (System.nanoTime() - t0) / 1e9, ok = true))
-            ok
+            try sink.write(filtered, batchId)
+            catch { case e: Throwable => record(ok = false); throw e }
+            record(ok = true)
+            true
           }
         }
       }
@@ -90,13 +98,17 @@ object CdcPipeline {
         val remaining = math.max(0L, deadline - System.nanoTime())
         id -> Try(Await.result(f, remaining.nanos)).getOrElse(false)
       }.toMap
-      pool.shutdown()
       if (!policySatisfied(cfg, acks))
         throw new RuntimeException(
           s"commit policy ${cfg.commitPolicy} not satisfied for batch $batchId: acks=$acks")
       // commit only acked sinks — unacked ones will re-receive on replay
       acks.foreach { case (id, ok) => if (ok) ledger.commit(id, batchId) }
-    } finally batch.unpersist()
+    } finally {
+      // also on an interrupt escaping the await (query stop): the workers
+      // exit once their sink returns instead of idling forever
+      pool.shutdown()
+      batch.unpersist()
+    }
   }
 
   /** Launch as a Structured Streaming query. */

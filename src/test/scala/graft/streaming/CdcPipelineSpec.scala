@@ -6,6 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** Coordinator semantics: fan-out, commit policies, ledger replay, DLQ, tx batching. */
 class CdcPipelineSpec extends SparkSpec {
@@ -32,6 +35,53 @@ class CdcPipelineSpec extends SparkSpec {
     assert(s1.totalRows == 10 && s2.totalRows == 10)
     assert(ledger.committed("s1") == 0L && ledger.committed("s2") == 0L)
     assert(ledger.minCommitted(Seq("s1", "s2")) == 0L)
+  }
+
+  test("processors run once per batch, however many sinks read it") {
+    val seen = spark.sparkContext.longAccumulator("processor-rows")
+    val counting = udf { (_: Long) => seen.add(1); true }
+    val (s1, s2) = (new MemorySink("s1"), new MemorySink("s2"))
+    val registry = new Metrics.Registry
+    val dir = tmp()
+    val cfg = Config(Seq(s1, s2), ledgerDir = dir, pipelineName = "once",
+      processors = Seq(df => df.filter(counting(col("ts_ms")))), metrics = Some(registry))
+    processBatch(cfg, new SinkLedger(dir))(events(200).repartition(4), 0L)
+    assert(s1.totalRows == 200 && s2.totalRows == 200)
+    assert(seen.value == 200L, "a sink re-ran the processor chain")
+    for (id <- Seq("s1", "s2"))
+      assert(registry.counterValue("graft_sink_events_total",
+        Seq("pipeline" -> "once", "sink" -> id)) == 200.0)
+  }
+
+  test("an interrupt during the fan-out still shuts its pool down") {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val slow = new EventSink {
+      val id = "slow"
+      def write(batch: DataFrame, batchId: Long): Unit = {
+        entered.countDown()
+        release.await(60, TimeUnit.SECONDS): Unit
+      }
+    }
+    val dir = tmp()
+    val cfg = Config(Seq(slow), ledgerDir = dir, sinkTimeout = Duration.Inf)
+    val batch = events(3)
+    val before = Thread.getAllStackTraces.keySet.asScala.toSet
+    @volatile var failure: Throwable = null
+    val driver = new Thread(() =>
+      try processBatch(cfg, new SinkLedger(dir))(batch, 0L)
+      catch { case t: Throwable => failure = t })
+    driver.start()
+    assert(entered.await(60, TimeUnit.SECONDS))
+    driver.interrupt() // a query stop while the sink is still writing
+    driver.join(60000)
+    assert(failure.isInstanceOf[InterruptedException], s"failure=$failure")
+    release.countDown() // the sink returns
+    val fanOut = (Thread.getAllStackTraces.keySet.asScala.toSet -- before - driver)
+      .filterNot(_.isDaemon)
+    fanOut.foreach(_.join(10000))
+    val alive = fanOut.filter(_.isAlive)
+    assert(alive.isEmpty, s"fan-out threads left running: ${alive.map(_.getName)}")
   }
 
   test("per-sink filter applies before write (FilteredSink semantics)") {
